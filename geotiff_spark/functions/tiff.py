@@ -392,104 +392,115 @@ def _resolve_dtype(ifd: Ifd) -> tuple[np.dtype, str]:
 
 
 # ---------------------------------------------------------------------------
-# Segment plan: per-strip/tile work units for distributed decode
+# Image decode: one strip/tile layout (segment_plan) and one placement
+# (assemble_segments), shared by the per-file and segment-parallel readers
 # ---------------------------------------------------------------------------
 
-def segment_plan(data: bytes, ifd: Ifd) -> tuple[dict, list[dict]]:
-    """Split one image into independently-decodable segments.
+def segment_plan(ifd: Ifd) -> tuple[dict, list[dict]]:
+    """Split one image into independently decodable segments.
 
-    Returns (image_meta, segments): image_meta carries dims/spp/dtype/
-    compression/predictor/photometric; each segment dict holds the byte
-    range plus placement (y0/x0/rows/cols/band). Segments decode in any
-    order on any executor and reassemble by placement — the engine's
-    within-file parallelism for large rasters (SURVEY.md B2).
+    Returns (meta, segments). ``meta`` holds width, height, num_samples,
+    dtype (name like 'u8'), dtype_np and photometric. Each segment holds
+    its byte range (offset, nbytes), its decoded shape (rows, cols, spp),
+    its placement (y0, x0, band: None when chunky, the plane when planar)
+    and what decode_planned_segment needs (compression, predictor,
+    dtype_np). Strips span the width and the last one is short; tiles are
+    always TileLength × TileWidth, padded past the image edge; planar
+    images list each band's segments in turn. Segments decode in any order
+    on any executor and are placed by assemble_segments — the per-file
+    decoder and the within-file parallelism for large rasters (SURVEY.md
+    B2) both run this plan.
     """
     width = ifd.scalar(TAG_IMAGE_WIDTH)
     height = ifd.scalar(TAG_IMAGE_LENGTH)
+    if width is None or height is None:
+        raise TiffDecodeError("missing ImageWidth/ImageLength")
     spp = ifd.scalar(TAG_SAMPLES_PER_PIXEL, 1)
-    compression = ifd.scalar(TAG_COMPRESSION, COMPRESSION_NONE)
-    predictor = ifd.scalar(TAG_PREDICTOR, 1)
     planar = ifd.scalar(TAG_PLANAR_CONFIG, 1)
-    photometric = ifd.scalar(TAG_PHOTOMETRIC, 1)
+    if planar not in (1, 2):
+        raise TiffDecodeError(f"unsupported PlanarConfiguration {planar}")
     dtype, dtype_name = _resolve_dtype(ifd)
     meta = {
         "width": width, "height": height, "num_samples": spp,
         "dtype": dtype_name, "dtype_np": dtype.str,
-        "compression": compression, "predictor": predictor,
-        "planar": planar, "photometric": photometric,
+        "photometric": ifd.scalar(TAG_PHOTOMETRIC, 1),
     }
-    segs: list[dict] = []
+    codec = {
+        "compression": ifd.scalar(TAG_COMPRESSION, COMPRESSION_NONE),
+        "predictor": ifd.scalar(TAG_PREDICTOR, 1),
+        "dtype_np": meta["dtype_np"],
+    }
     tiled = ifd.values(TAG_TILE_OFFSETS) is not None
     if tiled:
-        tw = ifd.scalar(TAG_TILE_WIDTH)
-        th = ifd.scalar(TAG_TILE_LENGTH)
-        offsets = ifd.values(TAG_TILE_OFFSETS)
-        counts = ifd.values(TAG_TILE_BYTE_COUNTS)
-        tiles_across = -(-width // tw)
-        per_plane = tiles_across * (-(-height // th))
-        bands = range(spp) if planar == 2 else [None]
-        for bi, band in enumerate(bands):
-            for t in range(per_plane):
-                idx = bi * per_plane + t
-                ty, tx = divmod(t, tiles_across)
-                segs.append({
-                    "offset": offsets[idx], "nbytes": counts[idx],
-                    "rows": th, "cols": tw,
-                    "spp": 1 if band is not None else spp,
-                    "y0": ty * th, "x0": tx * tw, "band": band,
-                })
+        kind, offsets_tag, counts_tag = "Tile", TAG_TILE_OFFSETS, TAG_TILE_BYTE_COUNTS
+        rows, cols = ifd.scalar(TAG_TILE_LENGTH), ifd.scalar(TAG_TILE_WIDTH)
     else:
-        offsets = ifd.values(TAG_STRIP_OFFSETS)
-        counts = ifd.values(TAG_STRIP_BYTE_COUNTS)
-        rows_per_strip = ifd.scalar(TAG_ROWS_PER_STRIP, height)
-        strips_per_band = -(-height // rows_per_strip)
-        bands = range(spp) if planar == 2 else [None]
-        for bi, band in enumerate(bands):
-            for s in range(strips_per_band):
-                idx = bi * strips_per_band + s
-                y0 = s * rows_per_strip
-                segs.append({
-                    "offset": offsets[idx], "nbytes": counts[idx],
-                    "rows": min(rows_per_strip, height - y0), "cols": width,
-                    "spp": 1 if band is not None else spp,
-                    "y0": y0, "x0": 0, "band": band,
-                })
-    return meta, segs
+        kind, offsets_tag, counts_tag = "Strip", TAG_STRIP_OFFSETS, TAG_STRIP_BYTE_COUNTS
+        rows, cols = ifd.scalar(TAG_ROWS_PER_STRIP, height), width
+    if not rows or not cols:
+        raise TiffDecodeError(f"missing or zero {kind} size: {rows} x {cols}")
+    offsets = ifd.values(offsets_tag, [])
+    counts = ifd.values(counts_tag, [])
+    bands = range(spp) if planar == 2 else [None]
+    grid = [
+        (band, y0, x0)
+        for band in bands
+        for y0 in range(0, height, rows)
+        for x0 in range(0, width, cols)
+    ]
+    if len(offsets) != len(grid) or len(counts) != len(grid):
+        raise TiffDecodeError(
+            f"{kind}Offsets/{kind}ByteCounts hold {len(offsets)}/{len(counts)} "
+            f"entries, the layout needs {len(grid)}"
+        )
+    return meta, [
+        dict(
+            codec, offset=offset, nbytes=nbytes,
+            rows=rows if tiled else min(rows, height - y0), cols=cols,
+            spp=spp if band is None else 1, y0=y0, x0=x0, band=band,
+        )
+        for (band, y0, x0), offset, nbytes in zip(grid, offsets, counts)
+    ]
 
 
-def decode_planned_segment(seg_bytes: bytes, meta: dict, seg: dict) -> np.ndarray:
-    """Decode one planned segment's raw bytes to its placed array."""
-    dtype = np.dtype(meta["dtype_np"])
-    return _decode_segment(
-        seg_bytes, 0, len(seg_bytes), meta["compression"], dtype,
-        seg["rows"], seg["cols"], seg["spp"], meta["predictor"],
-    )
+def decode_planned_segment(seg_bytes: bytes, seg: dict) -> np.ndarray:
+    """Decode one planned segment's raw bytes into (rows, cols, spp),
+    native byte order."""
+    dtype = np.dtype(seg["dtype_np"])
+    raw = _decompress(seg_bytes, seg["compression"])
+    shape = (seg["rows"], seg["cols"], seg["spp"])
+    expected = shape[0] * shape[1] * shape[2] * dtype.itemsize
+    if len(raw) < expected:
+        raise TiffDecodeError(
+            f"segment decodes to {len(raw)} bytes, expected {expected}"
+        )
+    arr = np.frombuffer(raw[:expected], dtype=dtype).reshape(shape)
+    # native byte order before any arithmetic
+    arr = arr.astype(dtype.newbyteorder("="), copy=False)
+    return _apply_predictor(arr, seg["predictor"])
 
 
-def assemble_segments(
-    meta: dict, pieces: list[tuple[dict, np.ndarray]]
-) -> np.ndarray:
-    """Place decoded segments into the full (h, w, spp) chunky array and
-    apply whole-image semantics (WhiteIsZero inversion)."""
-    h, w, spp = meta["height"], meta["width"], meta["num_samples"]
+def assemble_segments(meta: dict, pieces) -> np.ndarray:
+    """Place decoded segments, an iterable of (segment, array) pairs, into
+    the full (h, w, spp) chunky array and apply whole-image semantics
+    (WhiteIsZero inversion). Each piece is placed as it arrives, so a
+    generator of pieces never holds more than one decoded segment."""
+    h, w = meta["height"], meta["width"]
     native = np.dtype(meta["dtype_np"]).newbyteorder("=")
-    out = np.empty((h, w, spp), dtype=native)
+    out = np.empty((h, w, meta["num_samples"]), dtype=native)
     for seg, arr in pieces:
-        y0, x0 = seg["y0"], seg["x0"]
-        ys = min(arr.shape[0], h - y0)
-        xs = min(arr.shape[1], w - x0)
-        if seg["band"] is None:
-            out[y0 : y0 + ys, x0 : x0 + xs, :] = arr[:ys, :xs, :]
+        y0, x0, band = seg["y0"], seg["x0"], seg["band"]
+        rows, cols = seg["rows"], seg["cols"]
+        if y0 + rows > h or x0 + cols > w:  # edge tile: drop the padding
+            arr = arr[: h - y0, : w - x0]
+        if band is None:
+            out[y0 : y0 + rows, x0 : x0 + cols] = arr
         else:
-            out[y0 : y0 + ys, x0 : x0 + xs, seg["band"]] = arr[:ys, :xs, 0]
+            out[y0 : y0 + rows, x0 : x0 + cols, band] = arr[:, :, 0]
     if meta["photometric"] == 0:
         out = _invert_white_is_zero(out)
     return out
 
-
-# ---------------------------------------------------------------------------
-# Image decode
-# ---------------------------------------------------------------------------
 
 def _apply_predictor(block: np.ndarray, predictor: int) -> np.ndarray:
     """Horizontal predictor (2): per-row per-sample cumulative sum with
@@ -514,138 +525,22 @@ def _invert_white_is_zero(arr: np.ndarray) -> np.ndarray:
     return -arr  # float: best-effort; no fixture exercises it
 
 
-def _decode_segment(
-    data: bytes,
-    offset: int,
-    nbytes: int,
-    compression: int,
-    dtype: np.dtype,
-    rows: int,
-    cols: int,
-    spp: int,
-    predictor: int,
-) -> np.ndarray:
-    """Decode one strip/tile into (rows, cols, spp), native byte order.
-
-    ``rows`` may exceed what the compressed data holds for the final short
-    strip — the caller passes the clipped count.
-    """
-    raw = _decompress(data[offset : offset + nbytes], compression)
-    itemsize = dtype.itemsize
-    expected = rows * cols * spp * itemsize
-    if len(raw) < expected:
-        raise TiffDecodeError(
-            f"segment decodes to {len(raw)} bytes, expected {expected}"
-        )
-    arr = np.frombuffer(raw[:expected], dtype=dtype).reshape(rows, cols, spp)
-    # native byte order before any arithmetic
-    arr = arr.astype(dtype.newbyteorder("="), copy=False)
-    return _apply_predictor(arr, predictor)
-
-
 def decode_tiff_ifd(data: bytes, ifd: Ifd) -> dict:
     """Decode the image described by one IFD into a dense chunky array.
 
     Returns dict with keys: width, height, num_samples, dtype (name like
     'u8'/'i16'), array (np.ndarray shape (h, w, spp), native byte order).
     """
-    width = ifd.scalar(TAG_IMAGE_WIDTH)
-    height = ifd.scalar(TAG_IMAGE_LENGTH)
-    if width is None or height is None:
-        raise TiffDecodeError("missing ImageWidth/ImageLength")
-    spp = ifd.scalar(TAG_SAMPLES_PER_PIXEL, 1)
-    compression = ifd.scalar(TAG_COMPRESSION, COMPRESSION_NONE)
-    predictor = ifd.scalar(TAG_PREDICTOR, 1)
-    planar = ifd.scalar(TAG_PLANAR_CONFIG, 1)
-    photometric = ifd.scalar(TAG_PHOTOMETRIC, 1)
-    dtype, dtype_name = _resolve_dtype(ifd)
-
-    tiled = ifd.values(TAG_TILE_OFFSETS) is not None
-    if tiled:
-        arr = _decode_tiled(data, ifd, width, height, spp, compression, dtype, predictor, planar)
-    else:
-        arr = _decode_striped(data, ifd, width, height, spp, compression, dtype, predictor, planar)
-
-    if photometric == 0:
-        arr = _invert_white_is_zero(arr)
-
+    meta, segs = segment_plan(ifd)
+    arr = assemble_segments(meta, (
+        (seg, decode_planned_segment(
+            data[seg["offset"] : seg["offset"] + seg["nbytes"]], seg))
+        for seg in segs
+    ))
     return {
-        "width": width,
-        "height": height,
-        "num_samples": spp,
-        "dtype": dtype_name,
+        "width": meta["width"],
+        "height": meta["height"],
+        "num_samples": meta["num_samples"],
+        "dtype": meta["dtype"],
         "array": arr,
     }
-
-
-def _decode_striped(data, ifd, width, height, spp, compression, dtype, predictor, planar):
-    offsets = ifd.values(TAG_STRIP_OFFSETS)
-    counts = ifd.values(TAG_STRIP_BYTE_COUNTS)
-    if offsets is None or counts is None:
-        raise TiffDecodeError("missing strip offsets/byte counts")
-    rows_per_strip = ifd.scalar(TAG_ROWS_PER_STRIP, height)
-    strips_per_band = -(-height // rows_per_strip)  # ceil
-
-    if planar == 1:
-        out = np.empty((height, width, spp), dtype=dtype.newbyteorder("="))
-        for s, (off, cnt) in enumerate(zip(offsets, counts)):
-            y0 = s * rows_per_strip
-            rows = min(rows_per_strip, height - y0)
-            out[y0 : y0 + rows] = _decode_segment(
-                data, off, cnt, compression, dtype, rows, width, spp, predictor
-            )
-        return out
-    if planar == 2:
-        # per-band strip sets concatenated band-major; interleave at the end
-        if len(offsets) != strips_per_band * spp:
-            raise TiffDecodeError("planar strip count mismatch")
-        out = np.empty((height, width, spp), dtype=dtype.newbyteorder("="))
-        for band in range(spp):
-            for s in range(strips_per_band):
-                idx = band * strips_per_band + s
-                y0 = s * rows_per_strip
-                rows = min(rows_per_strip, height - y0)
-                plane = _decode_segment(
-                    data, offsets[idx], counts[idx], compression, dtype,
-                    rows, width, 1, predictor,
-                )
-                out[y0 : y0 + rows, :, band] = plane[:, :, 0]
-        return out
-    raise TiffDecodeError(f"unsupported PlanarConfiguration {planar}")
-
-
-def _decode_tiled(data, ifd, width, height, spp, compression, dtype, predictor, planar):
-    tw = ifd.scalar(TAG_TILE_WIDTH)
-    th = ifd.scalar(TAG_TILE_LENGTH)
-    offsets = ifd.values(TAG_TILE_OFFSETS)
-    counts = ifd.values(TAG_TILE_BYTE_COUNTS)
-    if not tw or not th:
-        raise TiffDecodeError("missing TileWidth/TileLength")
-    tiles_across = -(-width // tw)
-    tiles_down = -(-height // th)
-    per_plane = tiles_across * tiles_down
-    out = np.empty((height, width, spp), dtype=dtype.newbyteorder("="))
-
-    if planar == 1:
-        bands = [(None, spp)]
-    elif planar == 2:
-        bands = [(b, 1) for b in range(spp)]
-    else:
-        raise TiffDecodeError(f"unsupported PlanarConfiguration {planar}")
-
-    for bi, (band, seg_spp) in enumerate(bands):
-        for t in range(per_plane):
-            idx = bi * per_plane + t
-            ty, tx = divmod(t, tiles_across)
-            # tiles are always padded to full (th, tw) in the decoded stream
-            tile = _decode_segment(
-                data, offsets[idx], counts[idx], compression, dtype,
-                th, tw, seg_spp, predictor,
-            )
-            y0, x0 = ty * th, tx * tw
-            ys, xs = min(th, height - y0), min(tw, width - x0)
-            if band is None:
-                out[y0 : y0 + ys, x0 : x0 + xs, :] = tile[:ys, :xs, :]
-            else:
-                out[y0 : y0 + ys, x0 : x0 + xs, band] = tile[:ys, :xs, 0]
-    return out

@@ -159,7 +159,7 @@ def raster_decoded_sizes(spark: SparkSession, paths: list[str]) -> DataFrame:
                 rid = path.rsplit("/", 1)[-1]
                 try:
                     _bo, ifds = tiff.parse_ifds(bytes(content))
-                    meta, _segs = tiff.segment_plan(bytes(content), ifds[0])
+                    meta, _segs = tiff.segment_plan(ifds[0])
                     nbytes = (
                         meta["width"] * meta["height"] * meta["num_samples"]
                         * np.dtype(meta["dtype_np"]).itemsize

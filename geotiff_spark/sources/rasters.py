@@ -1,9 +1,14 @@
 """Raster ingest: binaryFile scan → mapInPandas decode → rasters DataFrame.
 
-Engine equivalent of GeoTiff::read (/root/reference/src/lib.rs:49-84), run
-once per file on executors. read_rasters parallelizes across FILES (the
-common corpus shape); read_rasters_parallel parallelizes WITHIN files at
-strip/tile granularity (bit-identical, for corpora of few huge rasters).
+Engine equivalent of GeoTiff::read (the reference crate, src/lib.rs:49-84).
+read_rasters parallelizes across FILES (the common corpus shape): each file
+is decoded whole by functions.geotiff.read_geotiff in one task.
+read_rasters_parallel parallelizes WITHIN files: it ships the strips/tiles
+of one file to different tasks and places them back together, for corpora
+of few huge rasters. Both run the same layout (tiff.segment_plan), segment
+decoder (tiff.decode_planned_segment), placement (tiff.assemble_segments),
+geo header parse (geotiff.geo_header) and row builders, so their rows are
+bit-identical, error rows included.
 At 100 TB the rasters table is written once to Parquet and reused — the
 decode cost is paid one time per raster, not per query (persisted-table
 sampling is golden-tested).
@@ -15,6 +20,7 @@ through long columns — the bytes+tag form is lossless for all 10 dtypes.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 
 import pandas as pd
@@ -66,6 +72,41 @@ RASTER_SCHEMA = StructType(
 )
 
 
+def _raster_row(raster_id: str, rec: dict, data: bytes | None) -> dict:
+    """The RASTER_SCHEMA row of a decoded raster record (read_geotiff keys;
+    ``array`` is passed as ``data`` bytes)."""
+    kind, coeffs = rec["transform"]
+    return {
+        "raster_id": raster_id,
+        "width": rec["width"],
+        "height": rec["height"],
+        "num_samples": rec["num_samples"],
+        "dtype": rec["dtype"],
+        "transform": {"kind": kind, "coeffs": [float(c) for c in coeffs]},
+        "raster_type": rec["raster_type"],
+        "geo_keys": {k: str(v) for k, v in rec["geo_keys"].items()},
+        "extent": dict(zip(("minx", "miny", "maxx", "maxy"), rec["extent"])),
+        "data": data,
+        "error": None,
+    }
+
+
+def _error_text(exc: Exception) -> str:
+    return f"{type(exc).__name__}: {exc}"
+
+
+def _error_row(raster_id: str, error: str) -> dict:
+    """The RASTER_SCHEMA row of a raster that failed to decode: an
+    error-status row, not a failed job."""
+    row = dict.fromkeys(RASTER_SCHEMA.fieldNames())
+    row.update(raster_id=raster_id, error=error)
+    return row
+
+
+def _raster_id(path: str) -> str:
+    return path.rsplit("/", 1)[-1]
+
+
 def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # import inside the UDF: executors only need the pure-numpy kernel
     from geotiff_spark.functions.geotiff import read_geotiff
@@ -73,49 +114,12 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows = []
         for path, content in zip(pdf["path"], pdf["content"]):
+            rid = _raster_id(path)
             try:
                 rec = read_geotiff(bytes(content))
-                rows.append(
-                    {
-                        "raster_id": path.rsplit("/", 1)[-1],
-                        "width": rec["width"],
-                        "height": rec["height"],
-                        "num_samples": rec["num_samples"],
-                        "dtype": rec["dtype"],
-                        "transform": {
-                            "kind": rec["transform"][0],
-                            "coeffs": [float(c) for c in rec["transform"][1]],
-                        },
-                        "raster_type": rec["raster_type"],
-                        "geo_keys": {
-                            k: str(v) for k, v in rec["geo_keys"].items()
-                        },
-                        "extent": {
-                            "minx": rec["extent"][0],
-                            "miny": rec["extent"][1],
-                            "maxx": rec["extent"][2],
-                            "maxy": rec["extent"][3],
-                        },
-                        "data": rec["array"].tobytes(),
-                        "error": None,
-                    }
-                )
-            except Exception as exc:  # error-status row, don't kill the job
-                rows.append(
-                    {
-                        "raster_id": path.rsplit("/", 1)[-1],
-                        "width": None,
-                        "height": None,
-                        "num_samples": None,
-                        "dtype": None,
-                        "transform": None,
-                        "raster_type": None,
-                        "geo_keys": None,
-                        "extent": None,
-                        "data": None,
-                        "error": f"{type(exc).__name__}: {exc}",
-                    }
-                )
+                rows.append(_raster_row(rid, rec, rec["array"].tobytes()))
+            except Exception as exc:
+                rows.append(_error_row(rid, _error_text(exc)))
         yield pd.DataFrame(rows)
 
 
@@ -139,6 +143,107 @@ def read_rasters(
     return scan.mapInPandas(_decode_batches, schema=RASTER_SCHEMA)
 
 
+# read_rasters_parallel stages. Each raster has one header row, whose
+# ``header_json`` is {"meta": segment_plan meta, "row": its RASTER_SCHEMA
+# row without data}, or {"row": its error row} when the header does not
+# parse; its ``seg_json`` is null. Each segment row carries its plan entry
+# in ``seg_json``, which gains "decode_error" when stage 2 fails on it.
+_SEGMENT_SCHEMA = StructType([
+    StructField("raster_id", StringType()),
+    StructField("seg_bytes", BinaryType()),
+    StructField("seg_json", StringType()),
+    StructField("header_json", StringType()),
+])
+_DECODED_SCHEMA = StructType([
+    StructField("raster_id", StringType()),
+    StructField("decoded", BinaryType()),
+    StructField("seg_json", StringType()),
+    StructField("header_json", StringType()),
+])
+
+
+def _explode_segments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Stage 1: parse each file's header, emit one row per segment with
+    only that segment's compressed bytes."""
+    from geotiff_spark.functions import geotiff, tiff
+
+    for pdf in batches:
+        rows = []
+        for path, content in zip(pdf["path"], pdf["content"]):
+            data = bytes(content)
+            rid = _raster_id(path)
+            try:
+                _bo, ifds = tiff.parse_ifds(data)
+                meta, segs = tiff.segment_plan(ifds[0])
+                rec = {**meta, **geotiff.geo_header(
+                    ifds[0], meta["width"], meta["height"])}
+                header = {"meta": meta, "row": _raster_row(rid, rec, None)}
+            except Exception as exc:
+                header, segs = {"row": _error_row(rid, _error_text(exc))}, []
+            rows.append({"raster_id": rid, "seg_bytes": b"", "seg_json": None,
+                         "header_json": json.dumps(header)})
+            for seg in segs:
+                # each segment carries its own decode fields, so stage 2
+                # decodes with no join back to the header
+                off, n = seg.pop("offset"), seg.pop("nbytes")
+                rows.append({"raster_id": rid, "seg_bytes": data[off : off + n],
+                             "seg_json": json.dumps(seg), "header_json": None})
+        yield pd.DataFrame(rows, columns=_SEGMENT_SCHEMA.fieldNames())
+
+
+def _decode_segments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Stage 2: decode segments wherever they landed."""
+    from geotiff_spark.functions import tiff
+
+    for pdf in batches:
+        decoded, seg_jsons = [], []
+        for seg_bytes, seg_json in zip(pdf["seg_bytes"], pdf["seg_json"]):
+            out = b""
+            if seg_json is not None:
+                seg = json.loads(seg_json)
+                try:
+                    out = tiff.decode_planned_segment(bytes(seg_bytes), seg).tobytes()
+                except Exception as exc:
+                    seg["decode_error"] = _error_text(exc)
+                    seg_json = json.dumps(seg)
+            decoded.append(out)
+            seg_jsons.append(seg_json)
+        yield pd.DataFrame({
+            "raster_id": pdf["raster_id"], "decoded": decoded,
+            "seg_json": seg_jsons, "header_json": pdf["header_json"],
+        })
+
+
+def _assemble_raster(key, pdf):
+    """Stage 3: place one raster's decoded segments into its row. No type
+    hints, so pyspark uses the positional applyInPandas protocol."""
+    import numpy as np
+
+    from geotiff_spark.functions import tiff
+
+    header = json.loads(pdf["header_json"].dropna().iloc[0])
+    row = header["row"]
+    if row["error"] is None:
+        try:
+            meta = header["meta"]
+            native = np.dtype(meta["dtype_np"]).newbyteorder("=")
+            parts = pdf.dropna(subset=["seg_json"])
+            segs = [json.loads(s) for s in parts["seg_json"]]
+            failed = [s["decode_error"] for s in segs if "decode_error" in s]
+            if failed:
+                row = _error_row(key[0], failed[0])
+            else:
+                full = tiff.assemble_segments(meta, (
+                    (seg, np.frombuffer(buf, dtype=native).reshape(
+                        seg["rows"], seg["cols"], seg["spp"]))
+                    for seg, buf in zip(segs, parts["decoded"])
+                ))
+                row["data"] = full.tobytes()
+        except Exception as exc:
+            row = _error_row(key[0], _error_text(exc))
+    return pd.DataFrame([row])
+
+
 def read_rasters_parallel(
     spark: SparkSession,
     path: str,
@@ -157,178 +262,18 @@ def read_rasters_parallel(
     use it when single large rasters would serialize decode (e.g. one
     LZW-compressed file with thousands of strips).
     """
-    import json
-
-    from geotiff_spark.functions import geokeys, tiff, transforms
-
-    seg_schema = StructType([
-        StructField("raster_id", StringType()),
-        StructField("seg_idx", IntegerType()),
-        StructField("seg_bytes", BinaryType()),
-        StructField("seg_json", StringType()),
-        StructField("meta_json", StringType()),   # only on seg_idx == 0
-        StructField("n_segs", IntegerType()),
-    ])
-
-    def explode_segments(batches):
-        for pdf in batches:
-            rows = []
-            for pth, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                rid = pth.rsplit("/", 1)[-1]
-                try:
-                    bo, ifds = tiff.parse_ifds(data)
-                    ifd = ifds[0]
-                    meta, segs = tiff.segment_plan(data, ifd)
-                    # header metadata: geokeys + transform + extent
-                    directory = ifd.values(tiff.TAG_GEO_KEY_DIRECTORY)
-                    if directory is None:
-                        gk = geokeys.default_geo_key_directory()
-                    else:
-                        gk = geokeys.parse_geo_key_directory(
-                            directory,
-                            ifd.values(tiff.TAG_GEO_DOUBLE_PARAMS, []),
-                            ifd.scalar(tiff.TAG_GEO_ASCII_PARAMS, ""),
-                        )
-                    ps = ifd.values(tiff.TAG_MODEL_PIXEL_SCALE)
-                    tp = ifd.values(tiff.TAG_MODEL_TIEPOINT)
-                    mx = ifd.values(tiff.TAG_MODEL_TRANSFORMATION)
-                    if ps is None and tp is None and mx is None:
-                        kind, coeffs = "identity", []
-                    else:
-                        kind, coeffs = transforms.transform_from_tag_data(ps, tp, mx)
-                    meta.update({
-                        "geo_keys": gk, "kind": kind,
-                        "coeffs": [float(c) for c in coeffs],
-                        "raster_type": gk.get("raster_type"),
-                    })
-                except Exception as exc:
-                    rows.append({
-                        "raster_id": rid, "seg_idx": 0, "seg_bytes": b"",
-                        "seg_json": "", "n_segs": 1,
-                        "meta_json": json.dumps(
-                            {"error": f"{type(exc).__name__}: {exc}"}
-                        ),
-                    })
-                    continue
-                # each segment carries its own decode essentials so stage 2
-                # decodes with no join back to the header
-                dec_meta = {
-                    "compression": meta["compression"],
-                    "predictor": meta["predictor"],
-                    "dtype_np": meta["dtype_np"],
-                }
-                for i, seg in enumerate(segs):
-                    sj = {k: v for k, v in seg.items()
-                          if k not in ("offset", "nbytes")}
-                    sj.update(dec_meta)
-                    rows.append({
-                        "raster_id": rid,
-                        "seg_idx": i,
-                        "seg_bytes": data[seg["offset"]: seg["offset"] + seg["nbytes"]],
-                        "seg_json": json.dumps(sj),
-                        "meta_json": json.dumps(meta) if i == 0 else None,
-                        "n_segs": len(segs),
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in seg_schema.fields])
-
-    dec_schema = StructType([
-        StructField("raster_id", StringType()),
-        StructField("seg_idx", IntegerType()),
-        StructField("decoded", BinaryType()),
-        StructField("seg_json", StringType()),
-        StructField("meta_json", StringType()),
-    ])
-
-    def decode_segments(batches):
-        for pdf in batches:
-            rows = []
-            for rid, i, seg_bytes, seg_json, meta_json in zip(
-                pdf["raster_id"], pdf["seg_idx"], pdf["seg_bytes"],
-                pdf["seg_json"], pdf["meta_json"],
-            ):
-                if not seg_json:  # error header row
-                    rows.append({"raster_id": rid, "seg_idx": int(i),
-                                 "decoded": b"", "seg_json": "",
-                                 "meta_json": meta_json})
-                    continue
-                seg = json.loads(seg_json)
-                try:
-                    arr = tiff.decode_planned_segment(
-                        bytes(seg_bytes), seg, seg
-                    )
-                    decoded = arr.tobytes()
-                except Exception as exc:
-                    decoded = b""
-                    seg["decode_error"] = f"{type(exc).__name__}: {exc}"
-                rows.append({
-                    "raster_id": rid, "seg_idx": int(i),
-                    "decoded": decoded, "seg_json": json.dumps(seg),
-                    "meta_json": meta_json,
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in dec_schema.fields])
-
-    def assemble(key, pdf):  # (key, pdf) -> pdf; hints omitted so pyspark
-        # uses the positional applyInPandas protocol without warnings
-        import numpy as np
-
-        rid = key[0]
-        header = pdf.loc[pdf["meta_json"].notna(), "meta_json"]
-        meta = json.loads(header.iloc[0]) if len(header) else {}
-        if "error" in meta or not meta:
-            return pd.DataFrame([{
-                "raster_id": rid, "width": None, "height": None,
-                "num_samples": None, "dtype": None, "transform": None,
-                "raster_type": None, "geo_keys": None, "extent": None,
-                "data": None, "error": meta.get("error", "missing header"),
-            }])
-        try:
-            import numpy as np
-
-            native = np.dtype(meta["dtype_np"]).newbyteorder("=")
-            pieces = []
-            for _, row in pdf.iterrows():
-                seg = json.loads(row["seg_json"])
-                if "decode_error" in seg:
-                    raise RuntimeError(seg["decode_error"])
-                arr = np.frombuffer(bytes(row["decoded"]), dtype=native).reshape(
-                    seg["rows"], seg["cols"], seg["spp"]
-                )
-                pieces.append((seg, arr))
-            full = tiff.assemble_segments(meta, pieces)
-            extent = transforms.model_extent(
-                meta["kind"], meta["coeffs"], meta["width"], meta["height"],
-                meta["raster_type"],
-            )
-            return pd.DataFrame([{
-                "raster_id": rid,
-                "width": meta["width"], "height": meta["height"],
-                "num_samples": meta["num_samples"], "dtype": meta["dtype"],
-                "transform": {"kind": meta["kind"], "coeffs": meta["coeffs"]},
-                "raster_type": meta["raster_type"],
-                "geo_keys": {k: str(v) for k, v in meta["geo_keys"].items()},
-                "extent": dict(zip(("minx", "miny", "maxx", "maxy"), extent)),
-                "data": full.tobytes(),
-                "error": None,
-            }])
-        except Exception as exc:
-            return pd.DataFrame([{
-                "raster_id": rid, "width": None, "height": None,
-                "num_samples": None, "dtype": None, "transform": None,
-                "raster_type": None, "geo_keys": None, "extent": None,
-                "data": None, "error": f"{type(exc).__name__}: {exc}",
-            }])
-
     scan = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .load(path)
         .select("path", "content")
     )
-    segs = scan.mapInPandas(explode_segments, schema=seg_schema)
+    segs = scan.mapInPandas(_explode_segments, schema=_SEGMENT_SCHEMA)
     n_part = partitions or spark.sparkContext.defaultParallelism
-    decoded = segs.repartition(n_part).mapInPandas(decode_segments, schema=dec_schema)
-    return decoded.groupBy("raster_id").applyInPandas(assemble, schema=RASTER_SCHEMA)
+    decoded = segs.repartition(n_part).mapInPandas(
+        _decode_segments, schema=_DECODED_SCHEMA)
+    return decoded.groupBy("raster_id").applyInPandas(
+        _assemble_raster, schema=RASTER_SCHEMA)
 
 
 def rasters_metadata(df: DataFrame) -> DataFrame:
