@@ -322,7 +322,7 @@ def pages_e2e_count(spark, pages_path: str, res: int = 7) -> int:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--parallelism", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--only", nargs="*", default=None)
     args = ap.parse_args()
 

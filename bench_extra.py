@@ -115,7 +115,7 @@ def bench_frames(spark, sf_dir: str, pages_path: str, bign_path: str,
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--parallelism", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--names", nargs="*", default=None)
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--runs", type=int, default=1)

@@ -363,7 +363,10 @@ def lsh_near_dup_pairs(
                 cos = sims / (norms[s:e, None] * norms[None, :])
                 bi, bj = np.nonzero(cos >= threshold)
                 gi = bi + s
-                keep = bj > gi  # upper triangle only: each pair once
+                # upper triangle only (each pair once), and never a
+                # duplicated key paired with itself — the big-bucket
+                # arm's id_a < id_b drops those too
+                keep = (bj > gi) & (ids[bj] != ids[gi])
                 gi, bj = gi[keep], bj[keep]
                 out_a.append(ids[gi])
                 out_b.append(ids[bj])

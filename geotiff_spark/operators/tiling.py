@@ -244,7 +244,9 @@ def focal_stats(
                         })
             yield pd.DataFrame(rows, columns=cols)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
+        # no type hints: partial ones make pyspark warn that it cannot
+        # infer the eval type; unhinted gets the positional protocol
         from geotiff_spark.functions.tiff import NUMPY_BY_NAME
 
         rid, tx, ty = key

@@ -3,6 +3,18 @@
 Scale posture (SURVEY.md §4): AQE on (incl. skew-join splitting), Arrow on
 with large batches (all custom kernels are vectorized pandas UDFs), shuffle
 partitions sized for the sandbox but overridable for a real cluster.
+
+Host fit: the session defaults to ``local[os.cpu_count()]`` and a heap of
+half the host's MemAvailable in whole GiB, capped at 16g;
+``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override them.
+
+Per-task Python cost: pyspark's worker calls
+``importlib.invalidate_caches()`` at the start of every task, which
+before CPython 3.13 re-reads the whole zip directory of pyspark.zip and
+the spark-core jar on ``sys.path`` (~250 ms a task on a 4-core host).
+Importing ``geotiff_spark`` on a worker makes that re-read happen only
+when an archive changed (see ``geotiff_spark._keep_unchanged_zip_directories``),
+so a reused worker pays it once.
 """
 
 from __future__ import annotations
@@ -11,7 +23,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+
+def _default_driver_mem() -> str:
+    """Half of MemAvailable in whole GiB (at least 1g), capped at 16g;
+    16g where /proc/meminfo is unavailable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    gib = int(line.split()[1]) // (2 * 1024 * 1024)
+                    return f"{max(1, min(16, gib))}g"
+    except OSError:
+        pass
+    return "16g"
+
+
+_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 
 DEFAULT_CONFIGS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -24,8 +51,8 @@ DEFAULT_CONFIGS: dict[str, str] = {
     # broadcast the polygon cell index / raster dim tables aggressively
     "spark.sql.autoBroadcastJoinThreshold": "67108864",
     "spark.sql.session.timeZone": "UTC",
-    # local mode: the driver JVM IS the executor — size it for 32
-    # concurrent tasks streaming Arrow batches
+    # local mode: the driver JVM IS the executor — size it for every
+    # core's task streaming Arrow batches
     "spark.driver.memory": _DRIVER_MEM,
     # Pin the heap (-Xms == driver memory) and pre-touch it once at
     # startup. Round-6 finding: with the default lazy/shrinkable heap,
@@ -41,8 +68,10 @@ DEFAULT_CONFIGS: dict[str, str] = {
     # at 13-18 s where the lazy config hit 147 s. The default dropped
     # 48g -> 16g to bound the one-time pre-touch tax (a tight-host
     # window made a 28g pre-touch take minutes; 16g starts in ~10 s and
-    # the full suite fits it). On a real cluster this is the standard
-    # spark-executor posture anyway (fixed-size pre-touched heaps).
+    # the full suite fits it), and now to at most half of MemAvailable
+    # so the pin also starts on a small host (16g cannot on 15 GiB). On
+    # a real cluster this is the standard spark-executor posture anyway
+    # (fixed-size pre-touched heaps).
     "spark.driver.extraJavaOptions":
         f"-Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch",
     # Same fault-storm fix for the PYTHON workers (they cannot pre-touch
@@ -62,7 +91,7 @@ def get_spark(
     master: str | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )

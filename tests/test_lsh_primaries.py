@@ -38,6 +38,30 @@ def test_embedding_lsh_near_dups_equal_exact(spark):
     assert got == exact and len(exact) > 0
 
 
+def test_embedding_lsh_near_dups_skip_duplicated_key(spark):
+    """A vec_id present twice in the corpus never pairs with itself, and
+    the extra copy changes no other pair."""
+    from geotiff_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    first = emb.agg(F.min("vec_id")).first()[0]
+    dup = emb.unionByName(emb.filter(F.col("vec_id") == first))
+
+    def pairs(corpus):
+        return set(
+            map(
+                tuple,
+                similarity.lsh_near_dup_pairs(
+                    corpus, threshold=0.4, n_planes=3, n_tables=32
+                ).collect(),
+            )
+        )
+
+    got = pairs(dup)
+    assert not [p for p in got if p[0] == p[1]]
+    assert got == pairs(emb) and len(got) > 0
+
+
 def test_lsh_fed_components_equal_exact_fed(spark):
     from geotiff_spark.operators import dedup
 

@@ -121,3 +121,40 @@ def test_pyramid_levels_match_numpy_downsample(spark):
                 (tx // 2) * 128 + (tx % 2) * 64 : (tx // 2) * 128 + (tx % 2) * 64 + want.shape[1],
             ]
             np.testing.assert_array_equal(got, want, err_msg=f"tile {tx},{ty}")
+
+
+def test_focal_stats_builds_without_warnings_and_matches_numpy(spark):
+    """focal_stats' group kernel is unhinted, so building it raises no
+    'Cannot infer the eval type' warning; its stats match a direct 3×3
+    in-bounds window sum over a small edge-clipped tile grid."""
+    import warnings
+
+    from geotiff_spark.operators.tiling import TILE_SCHEMA, focal_stats
+
+    ts, h, w = 3, 5, 7
+    arr = np.arange(h * w, dtype=np.uint16).reshape(h, w) * 7 % 50
+    rows = [
+        ("r", tx, ty, min(ts, w - tx * ts), min(ts, h - ty * ts), 1, "u16",
+         np.ascontiguousarray(arr[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]).tobytes())
+        for ty in range(2) for tx in range(3)
+    ]
+    tiles = spark.createDataFrame(rows, TILE_SCHEMA)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        stats = focal_stats(tiles, radius=1, tile_size=ts)
+    got = {(r.tile_x, r.tile_y): (r.f_sum, r.f_cnt, r.f_min, r.f_max)
+           for r in stats.collect()}
+
+    pad = np.zeros((h + 2, w + 2), dtype=np.int64)
+    pad[1:-1, 1:-1] = arr
+    ones = np.zeros_like(pad)
+    ones[1:-1, 1:-1] = 1
+    fsum = sum(pad[u:u + h, v:v + w] for u in range(3) for v in range(3))
+    fcnt = sum(ones[u:u + h, v:v + w] for u in range(3) for v in range(3))
+    want = {}
+    for ty in range(2):
+        for tx in range(3):
+            s = fsum[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
+            c = fcnt[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
+            want[(tx, ty)] = (int(s.sum()), int(c.sum()), int(s.min()), int(s.max()))
+    assert got == want
