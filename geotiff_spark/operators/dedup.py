@@ -19,10 +19,12 @@ Scale design notes:
 
 from __future__ import annotations
 
+import hashlib
 import weakref
 
 import numpy as np
 import pandas as pd
+from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
@@ -197,6 +199,36 @@ def _minhash_params(num_hashes: int) -> tuple[np.ndarray, np.ndarray]:
     return mult, add
 
 
+def _minhash_sigs(hashes: pd.Series, mult: np.ndarray,
+                  add: np.ndarray) -> pd.Series:
+    """The minwise pass of :func:`minhash_signatures` over one Arrow
+    batch of base-hash arrays: sig_i = min(mult_i * h + add_i mod 2^64)."""
+    n = len(hashes)
+    if n == 0:
+        return pd.Series([], dtype=object)
+    # NULL text → NULL shingle array → None here; treat like empty so
+    # the doc gets a NULL signature and drops via the isNotNull filter
+    lens = np.fromiter(
+        (0 if h is None else len(h) for h in hashes), dtype=np.int64, count=n
+    )
+    out: list = [None] * n
+    nz = np.nonzero(lens > 0)[0]
+    if len(nz):
+        flat = np.concatenate(
+            [np.asarray(hashes.iloc[i], dtype=np.int64) for i in nz]
+        ).view(np.uint64)
+        starts = np.zeros(len(nz), dtype=np.int64)
+        np.cumsum(lens[nz][:-1], out=starts[1:])
+        sig = np.empty((len(nz), len(mult)), dtype=np.uint64)
+        for i in range(len(mult)):
+            v = mult[i] * flat + add[i]  # wraps mod 2^64 by design
+            sig[:, i] = np.minimum.reduceat(v, starts)
+        signed = sig.view(np.int64)
+        for j, i in enumerate(nz):
+            out[i] = signed[j]
+    return pd.Series(out, dtype=object)
+
+
 def minhash_signatures(
     df: DataFrame,
     num_hashes: int = 64,
@@ -219,30 +251,7 @@ def minhash_signatures(
 
     @pandas_udf("array<long>")
     def sigs_udf(hashes: pd.Series) -> pd.Series:
-        n = len(hashes)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        # NULL text → NULL shingle array → None here; treat like empty so
-        # the doc gets a NULL signature and drops via the isNotNull filter
-        lens = np.fromiter(
-            (0 if h is None else len(h) for h in hashes), dtype=np.int64, count=n
-        )
-        out: list = [None] * n
-        nz = np.nonzero(lens > 0)[0]
-        if len(nz):
-            flat = np.concatenate(
-                [np.asarray(hashes.iloc[i], dtype=np.int64) for i in nz]
-            ).view(np.uint64)
-            starts = np.zeros(len(nz), dtype=np.int64)
-            np.cumsum(lens[nz][:-1], out=starts[1:])
-            sig = np.empty((len(nz), num_hashes), dtype=np.uint64)
-            for i in range(num_hashes):
-                v = mult[i] * flat + add[i]  # wraps mod 2^64 by design
-                sig[:, i] = np.minimum.reduceat(v, starts)
-            signed = sig.view(np.int64)
-            for j, i in enumerate(nz):
-                out[i] = signed[j]
-        return pd.Series(out, dtype=object)
+        return _minhash_sigs(hashes, mult, add)
 
     # Docs with an empty shingle set (possible when shingle<=1 and the
     # text has no tokens) are dropped — same semantics as the old
@@ -283,7 +292,6 @@ def bucket_candidate_pairs(
     key: str,
     bucket_cols: list[str],
     max_inline_bucket: int = 256,
-    distinct: bool = True,
 ) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) from a bucketed table —
     the shared core of every LSH family here (MinHash bands, sign-LSH
@@ -300,14 +308,6 @@ def bucket_candidate_pairs(
     the single-host materializer; on a real cluster with executor churn
     use reliable checkpoint() / persist-with-replication — the blocks
     have no lineage to recompute from.)
-
-    ``distinct=False`` skips the cross-table pair dedup and returns the
-    raw (possibly repeated) pair stream — for callers that verify
-    candidates and can dedup AFTER their selective filter, where the
-    dedup exchange shrinks from every candidate to the survivors
-    (round 8: the full-width distinct was ~6.5 s of
-    embedding_near_dups_planted's 20 s at sf1.0; verifying ~28% more
-    raw pairs costs far less).
     """
     stacked = stacked.select(key, *bucket_cols).localCheckpoint(eager=True)
     grouped = stacked.groupBy(*bucket_cols).agg(
@@ -342,7 +342,7 @@ def bucket_candidate_pairs(
         .select("id_a", "id_b")
     )
     out = small.unionByName(big)
-    return out.distinct() if distinct else out
+    return out.distinct()
 
 
 def minhash_lsh_pairs(
@@ -694,6 +694,45 @@ def repeated_ngram_mine(
     )
 
 
+def _winnowed_fingerprints(batches, key: str, text: str, k: int,
+                           w: int):
+    """The winnowed mode of :func:`substring_fingerprints` over an
+    iterator of (key, text) pandas batches: md5 digests of every k-char
+    window, then the leftmost-argmin position per w consecutive digests."""
+    for pdf in batches:
+        keys: list = []
+        i_parts: list = []
+        d_parts: list = []
+        for kv, t in zip(pdf[key], pdf[text]):
+            n_pos = len(t) - (k - 1)
+            if n_pos <= 0:
+                continue
+            raw = b"".join(
+                hashlib.md5(t[i:i + k].encode("utf-8")).digest()[:8]
+                for i in range(n_pos)
+            )
+            dig = np.frombuffer(raw, dtype=">u8").astype(np.uint64)
+            if n_pos >= w:
+                wins = sliding_window_view(dig, w)
+                # np.argmin returns the FIRST (leftmost) minimum —
+                # the same tie-break as array_position(array_min)
+                sel = np.unique(
+                    np.arange(n_pos - w + 1) + wins.argmin(axis=1)
+                )
+            else:
+                # short doc: a single clamped window over all digests
+                sel = np.array([int(dig.argmin())])
+            keys.extend([kv] * len(sel))
+            i_parts.append(sel + 1)
+            d_parts.append(dig[sel])
+        if keys:
+            yield pd.DataFrame({
+                key: keys,
+                "i": np.concatenate(i_parts).astype(np.int32),
+                "d": np.concatenate(d_parts).view(np.int64),
+            })
+
+
 def substring_fingerprints(
     df: DataFrame,
     k: int = 50,
@@ -741,10 +780,6 @@ def substring_fingerprints(
     w = int(winnow)
     if w < 1:
         raise ValueError("winnow window must be >= 1")
-    import hashlib
-
-    from numpy.lib.stride_tricks import sliding_window_view
-
     schema = StructType([
         base_docs.schema[key],
         StructField("i", IntegerType()),
@@ -752,40 +787,29 @@ def substring_fingerprints(
     ])
 
     def fp(batches):
-        for pdf in batches:
-            keys: list = []
-            i_parts: list = []
-            d_parts: list = []
-            for kv, t in zip(pdf[key], pdf[text]):
-                n_pos = len(t) - (k - 1)
-                if n_pos <= 0:
-                    continue
-                raw = b"".join(
-                    hashlib.md5(t[i:i + k].encode("utf-8")).digest()[:8]
-                    for i in range(n_pos)
-                )
-                dig = np.frombuffer(raw, dtype=">u8").astype(np.uint64)
-                if n_pos >= w:
-                    wins = sliding_window_view(dig, w)
-                    # np.argmin returns the FIRST (leftmost) minimum —
-                    # the same tie-break as array_position(array_min)
-                    sel = np.unique(
-                        np.arange(n_pos - w + 1) + wins.argmin(axis=1)
-                    )
-                else:
-                    # short doc: a single clamped window over all digests
-                    sel = np.array([int(dig.argmin())])
-                keys.extend([kv] * len(sel))
-                i_parts.append(sel + 1)
-                d_parts.append(dig[sel])
-            if keys:
-                yield pd.DataFrame({
-                    key: keys,
-                    "i": np.concatenate(i_parts).astype(np.int32),
-                    "d": np.concatenate(d_parts).view(np.int64),
-                })
+        return _winnowed_fingerprints(batches, key, text, k, w)
 
     return base_docs.select(key, text).mapInPandas(fp, schema)
+
+
+def _excise_marked(texts: pd.Series, starts: pd.Series, k: int) -> pd.Series:
+    """The span removal of :func:`exact_substring_dedup` over one Arrow
+    batch: drop the k chars from every 1-based marked start."""
+    out = []
+    for t, st in zip(texts, starts):
+        if t is None:
+            out.append(None)
+            continue
+        if st is None or len(st) == 0:
+            out.append(t)
+            continue
+        # code-point array round trip (utf-32 is exact for any str)
+        codes = np.frombuffer(t.encode("utf-32-le"), dtype="<u4")
+        mask = np.zeros(len(codes), dtype=bool)
+        for s in st:
+            mask[int(s) - 1: int(s) - 1 + k] = True
+        out.append(codes[~mask].tobytes().decode("utf-32-le"))
+    return pd.Series(out, dtype=object)
 
 
 def exact_substring_dedup(
@@ -863,21 +887,7 @@ def exact_substring_dedup(
 
     @pandas_udf("string")
     def cleaned_udf(texts: pd.Series, starts: pd.Series) -> pd.Series:
-        out = []
-        for t, st in zip(texts, starts):
-            if t is None:
-                out.append(None)
-                continue
-            if st is None or len(st) == 0:
-                out.append(t)
-                continue
-            # code-point array round trip (utf-32 is exact for any str)
-            codes = np.frombuffer(t.encode("utf-32-le"), dtype="<u4")
-            mask = np.zeros(len(codes), dtype=bool)
-            for s in st:
-                mask[int(s) - 1: int(s) - 1 + k] = True
-            out.append(codes[~mask].tobytes().decode("utf-32-le"))
-        return pd.Series(out, dtype=object)
+        return _excise_marked(texts, starts, k)
 
     base = df.filter(F.col(text).isNotNull()).join(marks, key, "left")
     cleaned = cleaned_udf.asNondeterministic()(
@@ -1161,6 +1171,28 @@ def bloom_broadcast_destroy(packed: dict[int, np.ndarray]) -> None:
             _destroy_cached_bcasts(key)
 
 
+def _packed_bloom_hits(pos_series, bcasts, n_segments: int,
+                       seg_len: int) -> pd.Series:
+    """The bit test of :func:`bloom_membership_packed` over one Arrow
+    batch: 1 where every seed's position is set in its broadcast bitmap."""
+    out = np.ones(len(pos_series[0]), dtype=bool)
+    for si, ps in enumerate(pos_series):
+        p = ps.to_numpy(dtype=np.int64)
+        w = p >> 6
+        bit = p.astype(np.uint64) & np.uint64(63)
+        if n_segments == 1:
+            masks = bcasts[si][0].value[w]
+        else:
+            seg = w // seg_len
+            idx = w % seg_len
+            masks = np.empty(len(p), dtype=np.uint64)
+            for g in np.unique(seg):
+                sel = seg == g
+                masks[sel] = bcasts[si][g].value[idx[sel]]
+        out &= (masks >> bit) & np.uint64(1) == 1
+    return pd.Series(out.astype("int64"))
+
+
 def bloom_membership_packed(df: DataFrame, packed: dict[int, np.ndarray],
                             value_col: str = "text",
                             m: int = 4096, k: int = 4,
@@ -1188,22 +1220,7 @@ def bloom_membership_packed(df: DataFrame, packed: dict[int, np.ndarray],
 
     @pandas_udf("long")
     def _hit(*pos_series: pd.Series) -> pd.Series:
-        out = np.ones(len(pos_series[0]), dtype=bool)
-        for si, ps in enumerate(pos_series):
-            p = ps.to_numpy(dtype=np.int64)
-            w = p >> 6
-            bit = p.astype(np.uint64) & np.uint64(63)
-            if n_segments == 1:
-                masks = bcasts[si][0].value[w]
-            else:
-                seg = w // seg_len
-                idx = w % seg_len
-                masks = np.empty(len(p), dtype=np.uint64)
-                for g in np.unique(seg):
-                    sel = seg == g
-                    masks[sel] = bcasts[si][g].value[idx[sel]]
-            out &= (masks >> bit) & np.uint64(1) == 1
-        return pd.Series(out.astype("int64"))
+        return _packed_bloom_hits(pos_series, bcasts, n_segments, seg_len)
 
     pos_cols = [bloom_positions(value_col, s, m) for s in range(1, k + 1)]
     out = df.withColumn("bloom_hit", _hit(*pos_cols))

@@ -251,7 +251,6 @@ def lsh_near_dup_pairs(
     dim: int = 64,
     n_planes: int = 3,
     n_tables: int = 32,
-    max_inline_bucket: int = 512,
     max_local_bucket: int = 4096,
 ) -> DataFrame:
     """All-pairs cosine ≥ threshold via sign-LSH self-bucketing + exact

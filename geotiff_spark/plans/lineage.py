@@ -1,12 +1,23 @@
 """Per-partition lineage + row-count metrics (north rule).
 
-`instrument(df, stage)` wraps a DataFrame in a zero-copy mapInPandas pass
-that counts rows per physical partition; metrics flow back through a Spark
-accumulator (survives speculative re-execution by keying on partition id
-and keeping the max) and `flush(path)` persists them as parquet — the
-lineage side-table for checkpoint-resumable reruns.
+`instrument(df, stage)` attaches a JVM-side observed metric to `df`: a
+`histogram_numeric` over `spark_partition_id()`, which is projected into a
+temporary column for the metric and dropped again. The returned frame has
+the same schema and rows; its plan gains a CollectMetrics node, but no
+Python node, no shuffle and no extra job. `flush(path)` persists the counts
+as parquet plus a json summary — the lineage side-table for
+checkpoint-resumable reruns.
 
-The wrapper costs one iterator pass, no data copies, no extra shuffle.
+Why the counts are exact: every row of a partition has the same partition
+id, so each task's partial histogram is the single bin (pid, rows), and
+histogram_numeric merges bins only once it holds more than `nb` distinct
+values. A stage that re-executes a task can deliver a pid's bin twice;
+`snapshot()` keeps the max, so re-executed tasks overwrite, not add.
+A partition with no rows has no bin and is not listed.
+
+Spark keeps the metrics of the first action that runs the frame (a
+persisted frame is counted by the pass that fills the cache), and delivers
+them asynchronously on the listener bus, after the action has returned.
 """
 
 from __future__ import annotations
@@ -15,20 +26,16 @@ import json
 import os
 import time
 
-from pyspark import AccumulatorParam, TaskContext
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
-
-class _DictMaxParam(AccumulatorParam):
-    """Accumulate {key: rows}; re-executed tasks overwrite, not add."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            a[k] = max(a.get(k, 0), v)
-        return a
+_PID_COL = "__lineage_partition_id"
+# histogram_numeric merges bins only past nb distinct values: with the
+# largest nb it never merges two partitions' bins
+_NO_MERGE_BINS = 2**31 - 1
+# bound on waiting for the listener bus to deliver observed metrics
+_DELIVERY_WAIT_MS = 10_000
 
 
 class StageMetrics:
@@ -36,28 +43,49 @@ class StageMetrics:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.acc = spark.sparkContext.accumulator({}, _DictMaxParam())
+        self.observations: list[tuple[str, Observation]] = []
         self.started = time.time()
 
     def instrument(self, df: DataFrame, stage: str) -> DataFrame:
-        acc = self.acc
+        observation = Observation()
+        self.observations.append((stage, observation))
+        return (
+            df.select("*", F.spark_partition_id().alias(_PID_COL))
+            .observe(observation,
+                     F.histogram_numeric(F.col(_PID_COL),
+                                         F.lit(_NO_MERGE_BINS)).alias("bins"))
+            .drop(_PID_COL)
+        )
 
-        def count_rows(batches):
-            pid = TaskContext.get().partitionId()
-            rows = 0
-            for pdf in batches:
-                rows += len(pdf)
-                yield pdf
-            acc.add({f"{stage}\x1f{pid}": rows})
+    def _ran(self) -> list[tuple[str, Observation]]:
+        """The observations whose metrics have arrived. Waits, bounded, for
+        the listener bus to drain when some have not; a frame that never
+        ran stays undelivered and is skipped."""
 
-        return df.mapInPandas(count_rows, schema=df.schema)
+        def delivered():
+            return [(stage, o) for stage, o in self.observations
+                    if o._jo.future().isCompleted()]
+
+        done = delivered()
+        if len(done) < len(self.observations):
+            bus = self.spark.sparkContext._jsc.sc().listenerBus()
+            try:
+                bus.waitUntilEmpty(_DELIVERY_WAIT_MS)
+            except Py4JJavaError as exc:  # on timeout, report what arrived
+                name = exc.java_exception.getClass().getName()
+                if name != "java.util.concurrent.TimeoutException":
+                    raise
+            done = delivered()
+        return done
 
     def snapshot(self) -> list[dict]:
-        out = []
-        for key, rows in sorted(self.acc.value.items()):
-            stage, pid = key.split("\x1f")
-            out.append({"stage": stage, "partition_id": int(pid), "rows": rows})
-        return out
+        rows: dict[tuple[str, int], int] = {}
+        for stage, observation in self._ran():
+            for b in observation.get["bins"] or []:
+                key = (stage, int(b["x"]))
+                rows[key] = max(rows.get(key, 0), int(b["y"]))
+        return [{"stage": stage, "partition_id": pid, "rows": n}
+                for (stage, pid), n in sorted(rows.items())]
 
     def flush(self, path: str) -> None:
         """Persist the lineage side-table (parquet + a json summary)."""

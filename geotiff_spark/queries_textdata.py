@@ -1201,20 +1201,20 @@ def rep_signals_frame(docs):
     interpreted higher-order aggregate (~24 s at 2M pages); one Python
     dict-count per doc over the same tokens is ~5× cheaper and still
     row-local — zero shuffle either way. The token split is the
-    explicit Java-\\s class [ \\t\\n\\x0B\\f\\r] so Python re and Java
-    regex tokenize identically by construction; every count is an
-    exact integer, and the fraction arithmetic (division + round)
-    stays in the SAME JVM expressions as before, so the output doubles
-    are bit-identical to the previous form and to the oracle
-    (equality pinned by tests/test_plan_shapes.py semantics test and
-    the rep_signals oracle gate)."""
+    explicit class [ \\t\\n\\f\\r], the oracle's RE2 \\s: unlike the
+    Java and Python \\s it excludes \\x0B, which DuckDB keeps inside a
+    token. Every count is an exact integer, and the fraction arithmetic
+    (division + round) stays in the SAME JVM expressions as before, so
+    the output doubles are bit-identical to the previous form and to the
+    oracle (equality pinned by tests/test_plan_shapes.py semantics tests
+    and the rep_signals oracle gate)."""
     import re
 
     from pyspark.sql.pandas.functions import pandas_udf
 
     @pandas_udf("struct<n2:long,d2:long,n3:long,d3:long,top:long>")
     def counts_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        ws = re.compile("[ \t\n\x0b\f\r]+")
+        ws = re.compile("[ \t\n\f\r]+")
         for texts in it:
             n2 = []
             d2 = []

@@ -8,8 +8,8 @@ Stages (all DataFrame ops):
  1. pages scan (Iceberg if available, parquet fallback)
  2. fused decode → text extraction → geotag → cell encode → broadcast
     cell-index PIP join (single mapInPandas stage, zero shuffle)
- 3. per-partition lineage + row-count metrics (accumulator side-table,
-    persisted)
+ 3. per-partition lineage + row-count metrics (JVM observed-metric
+    side-table, persisted)
  4. hot-cell measurement → adaptive cell-prefix partition key
  5. resumable partitioned write (manifest-committed buckets): kill the
     job at any point and rerun — completed buckets are skipped and the

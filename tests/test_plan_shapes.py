@@ -217,6 +217,29 @@ def test_rep_signals_top_gram_run_length_semantics(spark):
     assert got[2]["dup_2gram_frac"] == 0.8  # 1 distinct of 5
 
 
+def test_rep_signals_vertical_tab_matches_oracle(spark):
+    """The oracle's RE2 \\s excludes \\x0B, so DuckDB keeps 'a\\x0bb' as
+    one token; the engine must split the same way."""
+    import duckdb
+    import pandas as pd
+
+    from geotiff_spark.queries_textdata import SQL_REP_SIGNALS, rep_signals_frame
+
+    documents = pd.DataFrame({
+        "doc_id": [0, 1, 2],
+        "text": ["a\x0bb c a b c", "a\x0bb a\x0bb a b", "x\x0b\x0by x y"],
+    })
+    got = sorted(tuple(r) for r in
+                 rep_signals_frame(spark.createDataFrame(documents)).collect())
+    con = duckdb.connect()
+    try:
+        con.register("documents", documents)
+        want = sorted(con.execute(SQL_REP_SIGNALS).fetchall())
+    finally:
+        con.close()
+    assert got == want
+
+
 def test_url_canonical_dedup_single_exchange(spark):
     """Canonicalization is row-local codegen; the only data exchange is
     the canonical-keyed aggregation (partial-aggregatable, so hot

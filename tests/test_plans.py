@@ -100,6 +100,72 @@ def test_lineage_metrics_row_counts(spark, tmp_path):
     assert any(f.startswith("metrics_") for f in files)
 
 
+def test_lineage_counts_skewed_partitions_exactly(spark):
+    """Partitions of 2000, ~500, ~20 and 0 rows: each listed partition's
+    count equals groupBy(spark_partition_id()).count(), and the empty
+    partition is listed by neither."""
+    from geotiff_spark.plans.lineage import StageMetrics
+
+    df = spark.range(0, 12000, numPartitions=6).filter(
+        (F.col("id") < 2500)
+        | ((F.col("id") % 100 == 0) & (F.col("id") < 10000))
+    )
+    want = {r[0]: r[1] for r in
+            df.groupBy(F.spark_partition_id()).count().collect()}
+    assert want[0] == 2000 and 5 not in want
+    m = StageMetrics(spark)
+    assert m.instrument(df, "skew").count() == sum(want.values())
+    got = {r["partition_id"]: r["rows"] for r in m.snapshot()}
+    assert got == want
+
+
+def test_lineage_instrument_adds_no_python_node(spark):
+    from geotiff_spark.plans.lineage import StageMetrics
+
+    df = spark.range(0, 100, numPartitions=2).withColumn("s", F.lit("x"))
+    out = StageMetrics(spark).instrument(df, "scan")
+    assert out.schema == df.schema
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "CollectMetrics" in plan, plan
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                 "Python"):
+        assert node not in plan, plan
+
+
+def test_lineage_snapshot_skips_a_frame_that_never_ran(spark):
+    import time
+
+    from geotiff_spark.plans.lineage import StageMetrics
+
+    m = StageMetrics(spark)
+    m.instrument(spark.range(0, 10, numPartitions=2), "never")
+    assert m.instrument(spark.range(0, 30, numPartitions=3),
+                        "ran").count() == 30
+    t0 = time.perf_counter()
+    snap = m.snapshot()
+    assert time.perf_counter() - t0 < 5.0
+    assert {r["stage"] for r in snap} == {"ran"}
+    assert sum(r["rows"] for r in snap) == 30
+
+
+def test_lineage_persisted_frame_counts_each_partition_once(spark):
+    from geotiff_spark.plans.lineage import StageMetrics
+
+    m = StageMetrics(spark)
+    df = m.instrument(spark.range(0, 1000, numPartitions=4), "cached")
+    df = df.persist()
+    try:
+        assert df.count() == 1000
+        assert df.agg(F.sum("id")).first()[0] == sum(range(1000))
+        assert df.filter(F.col("id") % 2 == 0).count() == 500
+    finally:
+        df.unpersist()
+    snap = m.snapshot()
+    assert sorted(r["partition_id"] for r in snap) == [0, 1, 2, 3]
+    assert [r["rows"] for r in snap] == [250] * 4
+
+
 def test_checkpoint_resume_kill_and_rerun(spark, tmp_path):
     """Kill mid-write, rerun, output identical to uninterrupted write and
     completed buckets skipped."""

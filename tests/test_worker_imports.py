@@ -74,3 +74,28 @@ def test_deleted_zip_does_not_raise(zip_on_path):
     importlib.invalidate_caches()
     with pytest.raises(ImportError):
         importlib.import_module("zmod_gone")
+
+
+@pytest.mark.parametrize("builder", [
+    "minhash_signatures", "substring_fingerprints", "exact_substring_dedup",
+    "bloom_membership_packed",
+])
+def test_text_udf_closures_import_the_engine(builder):
+    """A UDF closure is pickled by value with the globals it names, and a
+    module-level engine function among those is pickled by reference:
+    unpickling it in the worker imports geotiff_spark, which installs the
+    invalidation above. Each nested ``def`` of these builders is shipped
+    to a worker, so each must name one. (Their lambdas build Column
+    expressions on the driver and are never shipped.)"""
+    import types
+
+    from geotiff_spark.operators import dedup
+
+    engine_fns = {name for name, obj in vars(dedup).items()
+                  if isinstance(obj, types.FunctionType)
+                  and obj.__module__ == dedup.__name__}
+    nested = [c for c in getattr(dedup, builder).__code__.co_consts
+              if isinstance(c, types.CodeType) and c.co_name != "<lambda>"]
+    assert nested
+    for code in nested:
+        assert engine_fns & set(code.co_names), code.co_name
